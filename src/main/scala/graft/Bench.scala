@@ -20,13 +20,18 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def once(name: String): Double = {
+    // None when the query throws: a failure is never recorded as a timing
+    def once(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val t = (System.nanoTime() - t0) / 1e9
       // operators may persist self-join intermediates; drop them so each
       // query is measured against a clean executor (no cross-query GC
@@ -41,7 +46,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       System.gc()
-      t
+      Option.when(ok)(t)
     }
 
     // Median of N runs per query: a single noisy run (sandbox contention,
@@ -63,12 +68,16 @@ object Bench {
     val warmRun = sys.env.contains("SPARK_GRAFT_BENCH_WARMRUN")
     // (min, median, max): the median is the record; min/max expose the
     // run-to-run spread so a noisy sandbox can't masquerade as a
-    // regression (or hide one).
-    def materialize(name: String): (Double, Double, Double) = {
-      if (warmRun) once(name): Unit
-      val ts = Seq.fill(runs)(once(name)).sorted
-      (ts.head, ts(ts.size / 2), ts.last)
-    }
+    // regression (or hide one). None if any run of the query failed.
+    def materialize(name: String): Option[(Double, Double, Double)] =
+      if (warmRun && once(name).isEmpty) None
+      else {
+        val ts = Seq.fill(runs)(once(name))
+        Option.when(!ts.contains(None)) {
+          val sorted = ts.flatten.sorted
+          (sorted.head, sorted(sorted.size / 2), sorted.last)
+        }
+      }
 
     // JVM/session warmup so the first measured query doesn't absorb
     // classloading + codegen bring-up.
@@ -78,14 +87,15 @@ object Bench {
     // Per-query codegen warmup on the smallest scale factor: identical
     // plan shape generates identical code, so the janino compile is
     // cached and the measured run reflects data-proportional work (the
-    // 100 TB-relevant quantity), not one-time JIT.
+    // 100 TB-relevant quantity), not one-time JIT. An error here fails
+    // the run: every query runs at sf0.001 (Verify dumps all of them
+    // there), so a warm-up failure is a defect, not a scale limit.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     def warmup(names: Seq[String]): Unit =
       if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
         names.foreach { n =>
-          try SparkEntry.queries(n)(spark, warmDir)
+          SparkEntry.queries(n)(spark, warmDir)
             .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
         }
 
     // Default = the HEADLINE subset: the reference-shaped workload
@@ -100,12 +110,16 @@ object Bench {
       else SparkEntry.headlines.sorted
     warmup(names)
     val results = names.map(n => n -> materialize(n))
-    val qs = results.map { case (k, (_, med, _)) => "\"" + k + "\":" + med }
+    val timed = results.collect { case (k, Some(r)) => k -> r }
+    val qs = timed.map { case (k, (_, med, _)) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
-    val spread = results.map { case (k, (min, _, max)) =>
+    val spread = timed.map { case (k, (min, _, max)) =>
       "\"" + k + "\":{\"min\":" + min + ",\"max\":" + max + "}"
     }.mkString("{", ",", "}")
-    val total = results.map(_._2._2).sum
+    // failed queries are listed, never timed, and stay out of the total
+    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val total = timed.map(_._2._2).sum
     // Box identity (r13 lesson: cross-round comparisons are meaningless
     // across VM migrations/reboots — q161 moved 1.93→3.25 s on IDENTICAL
     // code). hostname + kernel boot_id prefix tags every record with the
@@ -120,7 +134,7 @@ object Bench {
       s"$host/$boot"
     }
     val warmField = if (warmRun) """"warm":true,""" else ""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"failed":$failed,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
     spark.stop()
   }
 }

@@ -87,12 +87,12 @@ object Fns {
     * per row — on a column where most values are non-numeric (q02's
     * market segments) that is an exception-throw-per-row hot path,
     * measured 3.0-3.6 s vs 0.3-0.6 s for this guarded form on 2M rows
-    * (graft.TcProbe, 50% non-numeric). Instead the integer grammar is
-    * made EXPLICIT — optional ASCII control/space padding (the set
-    * UTF8String.trimAll strips), optional sign, leading zeros, and at
+    * (PLANS "Round 14 third pass", 50% non-numeric). Instead the integer
+    * grammar is made EXPLICIT — optional ASCII control/space padding (the
+    * set UTF8String.trimAll strips), optional sign, leading zeros, and at
     * most 18 significant digits (more cannot fit int anyway; try_cast
-    * nulls them via overflow, this nulls them via no-match — same
-    * result) — extracted once per row with a cached regex, cast on the
+    * nulls them via overflow, this nulls them via no-match — same result)
+    * — extracted once per row with a cached regex, cast on the
     * guaranteed-parseable match only, and range-checked into int.
     * Deterministic and engine-portable by construction (the grammar is
     * in the expression, not in an engine's parse internals); probed
@@ -240,8 +240,9 @@ object Fns {
   /** [[spreadIfNarrow]] with a caller-chosen tiny-input threshold:
     * the default gate assumes sub-[[SpreadMinBytes]] scans carry at
     * most ~a second of one-core map work, which is false for
-    * regex-heavy text kernels on compressed text (r17 q178 StageProbe:
-    * a 0.6 MB documents scan carried ~1.8 s of single-task
+    * regex-heavy text kernels on compressed text (r17 q178, PLANS
+    * round 17 "q178 bigram_lm_score — FIXED": a 0.6 MB documents
+    * scan carried ~1.8 s of single-task
     * regexp_extract_all+explode). Such callers pass a lower
     * `minBytes` (0 = spread whenever narrow and scan-shaped).
     */
@@ -293,9 +294,10 @@ object Fns {
     * worth paying only when the fill parallelizes (i.e. when the
     * spread fired). On a tiny unspread input the racing per-consumer
     * recomputes run CONCURRENTLY on idle cores and cost less
-    * wall-clock than one serial single-task fill job (round-15 q208
-    * StageProbe: a 0.31 s one-task fill stage on a 0.6 MB corpus that
-    * r13's race overlapped to near zero).
+    * wall-clock than one serial single-task fill job (round-15 q208,
+    * PLANS "sf0.1 regression adjudication": a 0.31 s one-task fill
+    * stage on a 0.6 MB corpus that r13's race overlapped to near
+    * zero).
     */
   def tinyScan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical

@@ -130,13 +130,13 @@ object Classify {
       // materialize the cache BEFORE the consumers fan out: they
       // launch as parallel stages of one job, and parallel stages
       // share nothing in-flight — an unfilled cache is recomputed
-      // once per consumer (five interleaved tokenize stages in the
-      // sf1 StageProbe). Gated on the SAME tiny-scan test the spread
-      // uses: on a tiny unspread corpus each fill is a serial
-      // single-task barrier while the racing recomputes overlap on
-      // idle cores (round-15 q208 adjudication — r13 parity restored
-      // at sf0.1, the sf1 win kept). The model fill inherits the
-      // same decision: two serial fill jobs or zero.
+      // once per consumer (five interleaved tokenize stages in the sf1
+      // stage profile, PLANS "Round 14 sixth pass"). Gated on the SAME
+      // tiny-scan test the spread uses: on a tiny unspread corpus each
+      // fill is a serial single-task barrier while the racing recomputes
+      // overlap on idle cores (round-15 q208 adjudication — r13 parity
+      // restored at sf0.1, the sf1 win kept). The model fill inherits
+      // the same decision: two serial fill jobs or zero.
       val eager = !graft.functions.Fns.tinyScan(
         docs.filter(content.isNotNull && label.isNotNull)
           .select(content.as("__content")))

@@ -66,8 +66,9 @@ object NgramLm {
     // minBytes = 0: this kernel's per-byte cost (lowercase + regex
     // extract-all + bigram explode, then the stream re-derived by the
     // scoring join) breaks the default tiny-input gate's "sub-MB scan
-    // = sub-second map" assumption — r17 StageProbe measured ~1.8 s of
+    // = sub-second map" assumption — r17 measured ~1.8 s of
     // single-task work on a 0.6 MB scan the gate had left unspread
+    // (PLANS round 17, "q178 bigram_lm_score — FIXED")
     val ws = graft.functions.Fns.spreadIfNarrow(
         docs.select(id.as("doc_id"), content.as("__content")), col("doc_id"),
         minBytes = 0L)

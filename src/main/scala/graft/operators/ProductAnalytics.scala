@@ -309,8 +309,8 @@ object ProductAnalytics {
     * set too big for AQE broadcast — the shuffled semi re-clusters raw
     * rather than deduped volume; for near-unique (basket, item) inputs
     * (this operator's natural shape) the difference is marginal.
-    * Interleaved sf1 A/B (graft.PairsAb, box 1c5ffb49): lazy
-    * sorted-run min 2.87 / med 3.14 s vs checkpointed sorted-run
+    * Interleaved sf1 A/B (PLANS "Round 14 second pass", box 1c5ffb49):
+    * lazy sorted-run min 2.87 / med 3.14 s vs checkpointed sorted-run
     * 3.26/3.99 vs the r14a single-exchange self-join 3.56/4.45 vs the
     * r13 two-exchange self-join 3.77+. A basket-first single-exchange
     * variant (repartition raw on basket, exchange-free distinct above)

@@ -337,9 +337,10 @@ object Profiling {
   def robustStats(df: DataFrame, grp: Column,
                   modeOf: Column, spreadOf: Column,
                   maxWindowDomain: Long = DefaultWindowRankDomain): DataFrame = {
-    // spread the cache to session parallelism (r17 StageProbe: every
-    // data pass ran 3 tasks on 32 cores — the 3-split fixture layout
-    // rode through the persist; at real scale this is a no-op)
+    // spread the cache to session parallelism (r17 stage profile, PLANS
+    // round 17 "q144 robust_stats": every data pass ran 3 tasks on 32
+    // cores — the 3-split fixture layout rode through the persist; at
+    // real scale this is a no-op)
     val v = graft.operators.Dedup.spreadScan(
         df.select(grp.as("g"), modeOf.as("q"), spreadOf.as("x")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -383,8 +384,9 @@ object Profiling {
           // (g, x) counts ride one GROUPING SETS aggregate (both are
           // per-(g, value) counts off the same cache — the Expand
           // doubles map-side rows but halves the scan/job count; the
-          // r17 RsProbe A/B measured the fused pass faster, min 0.61
-          // vs 0.72 s at sf0.1). grouping_id discriminates the sets,
+          // r17 A/B (PLANS round 17 "q144 robust_stats") measured the
+          // fused pass faster, min 0.61 vs 0.72 s at sf0.1).
+          // grouping_id discriminates the sets,
           // so NULL measure values cannot collide with grouping nulls.
           // The MAD's deviation distribution then derives from the
           // (g, x) count rows arithmetically — |x − med| with the same
@@ -543,14 +545,14 @@ object Profiling {
     // fill explicitly. The |G|-sized result is materialized
     // (selfCleaning) so the cache can be dropped before returning —
     // callers of a lazy result would otherwise read a dead cache.
-    // MEASURED OFF for the parquet-backed production callers: the
-    // round-15 interleaved A/B (`graft.QcacheAb`, sf1) put the cached
-    // q157 shape at 2.77 s min vs 1.66 uncached and q155 at 2.35 vs
-    // 2.18 — the row-oriented cache write plus the extra fill/
-    // checkpoint job barriers cost more than the two saved COLUMNAR
-    // scans (the q139 persist lesson). The knob exists for callers
-    // whose v is an expensive DERIVED frame, where a re-scan replays
-    // real compute instead of a column-pruned file read.
+    // MEASURED OFF for the parquet-backed production callers: the round-15
+    // interleaved A/B (PLANS "Quantile-machinery input cache: REJECTED",
+    // sf1) put the cached q157 shape at 2.77 s min vs 1.66 uncached and
+    // q155 at 2.35 vs 2.18 — the row-oriented cache write plus the extra
+    // fill/checkpoint job barriers cost more than the two saved COLUMNAR
+    // scans (the q139 persist lesson). The knob exists for callers whose
+    // v is an expensive DERIVED frame, where a re-scan replays real
+    // compute instead of a column-pruned file read.
     if (persistInput) {
       val vP = v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       if (boundsOpt.isDefined) vP.count(): Unit

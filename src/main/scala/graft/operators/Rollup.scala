@@ -64,7 +64,10 @@ object Rollup {
                    sets: Seq[Seq[String]]): DataFrame = {
     require(keys.nonEmpty, "keys must be non-empty")
     require(sets.nonEmpty, "sets must be non-empty")
-    require(sets.distinct == sets, s"sets must be distinct, got $sets")
+    // compared as SETS: (k1, k2) and (k2, k1) are one grouping set with
+    // one grouping_id, so listing both would double-count the () row
+    require(sets.map(_.toSet).distinct.size == sets.size,
+      s"sets must be distinct, got $sets")
     require(sets.forall(_.forall(keys.contains)),
       s"every grouping set must be a subset of keys=$keys")
     val fine = df.groupBy(keys.map(col): _*)

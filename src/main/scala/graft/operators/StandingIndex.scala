@@ -81,8 +81,8 @@ import org.apache.spark.sql.types.LongType
 object StandingIndex {
 
   /** Default compaction trigger for the NEAR-DUP index — 4, not the
-    * chunk/match families' 8, from the round-15 IdxPublishBench
-    * maxLevels sweep (sf1, interleaved probe MINs): the near-dup
+    * chunk/match families' 8, from the round-15 maxLevels sweep (PLANS
+    * "maxLevels economics"; sf1, interleaved probe MINs): the near-dup
     * probe pays ~0.5 s PER LEVEL (bucket collision + Jaccard verify
     * each level: 1.20 s at 2 levels, 2.33 at 4, 4.20 at 8) and its
     * appends also grow with the live-level count (the delta id-gates

@@ -781,15 +781,15 @@ object TextAnalysis {
     // pattern). The output is vocabTop²-bounded, so Dedup.selfCleaning
     // materializes it and drops the cache before returning.
     //
-    // Two parallelism hazards measured at sf1 (StageProbe, round 14):
-    // the 6 MB documents scan yields 2 splits, so an unspread explode
-    // and the doc_id self-join both ran on 2 of 32 cores; and the
-    // three cache consumers launch as PARALLEL stages of one job, so
-    // an unmaterialized persist is computed concurrently by each
+    // Two parallelism hazards measured at sf1 (PLANS "Round 14 sixth
+    // pass"): the 6 MB documents scan yields 2 splits, so an unspread
+    // explode and the doc_id self-join both ran on 2 of 32 cores; and
+    // the three cache consumers launch as PARALLEL stages of one job,
+    // so an unmaterialized persist is computed concurrently by each
     // (cache-racing stages share nothing in-flight) — four 1.2 s
-    // derivations instead of one. spreadIfNarrow fixes the first;
-    // the count() action materializes the cache ONCE before the
-    // consumers fan out (4.15 → 1.7 s wall).
+    // derivations instead of one. spreadIfNarrow fixes the first; the
+    // count() action materializes the cache ONCE before the consumers
+    // fan out (4.15 → 1.7 s wall).
     val dt = graft.functions.Fns.spreadIfNarrow(
         docs.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),

@@ -93,8 +93,9 @@ class FnsSpec extends SparkSpec {
   test("tryCastInt matches try_cast on the full probed grammar") {
     // the r14 guarded form (explicit grammar, no per-row throw/catch)
     // must stay value-identical to Spark's try_cast on every case the
-    // TcProbe sweep established: signs, ASCII-control padding, leading
-    // zeros, int/long overflow, decimals/exponents/hex/inner spaces
+    // r14 probe sweep established (PLANS "Round 14 third pass"): signs,
+    // ASCII-control padding, leading zeros, int/long overflow,
+    // decimals/exponents/hex/inner spaces
     val cases = Seq("42", " 17 ", "+8", "-0", "BUILDING", "12.5", "",
       "99999999999", "999999999999999999999", "1e3", "0x10", " - 5",
       "\t42", "\n7", "\r8", " 9", " 3", "5\t", "6",

@@ -83,6 +83,10 @@ class RollupSpec extends SparkSpec {
     intercept[IllegalArgumentException](derived(df, Seq.empty))
     intercept[IllegalArgumentException](
       derived(df, Seq(Seq("k1"), Seq("k1"))))
+    // (k1, k2) and (k2, k1) are one grouping set: both copies carry one
+    // grouping_id, so the () row derived from that id would count twice
+    intercept[IllegalArgumentException](
+      derived(df, Seq(Seq("k1", "k2"), Seq("k2", "k1"), Seq.empty)))
   }
 
   test("property: fromPartials == native ROLLUP and CUBE on random frames") {

@@ -277,8 +277,9 @@ class ScaleSpec extends SparkSpec {
 
   test("maxDomain gate: both contract arms fire on live widened data") {
     // In-CI miniature of scripts/gen_sf_scale.py --widen (the recorded
-    // GateProbe evidence, r09): union COPIES key-shifted copies of the
-    // real sf0.001 lineitem with the same per-column-class offsets —
+    // r09 evidence, PLANS round 9 "--widen fixture"): union COPIES
+    // key-shifted copies of the real sf0.001 lineitem with the same
+    // per-column-class offsets —
     // integer-band shifts for the deliberately-discretized measure
     // (l_quantity + i*50: domain ×copies, still tiny) and fractional
     // shifts for the near-continuous one (l_extendedprice + i*937.75:
@@ -327,5 +328,22 @@ class ScaleSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("ksDrift"), e.getMessage)
     assert(e.getMessage.contains(gate.toString), e.getMessage)
+  }
+
+  test("q88 unpivot output is ordered on (l_orderkey, l_linenumber, measure)") {
+    // the oracle's ORDER BY, checked on the output itself at a scale
+    // with several range partitions: (l_orderkey, l_linenumber) repeats
+    // in the fixtures, so sorting only the 1× rows before the unpivot
+    // would interleave a repeated key's measures
+    val d = "/root/testdata/sf0.01"
+    val keys = SparkEntry.queries("q88_unpivot")(spark, d)
+      .select("l_orderkey", "l_linenumber", "measure").collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
+        r.getString(2)))
+    assert(keys.length === 3 * Tables.lineitem(spark, d).count())
+    val ord = Ordering[(Long, Long, String)]
+    val firstBad = (1 until keys.length).find(i => ord.gt(keys(i - 1), keys(i)))
+    assert(firstBad.isEmpty,
+      s"out of order at ${firstBad.map(i => keys.slice(i - 1, i + 1).toSeq)}")
   }
 }

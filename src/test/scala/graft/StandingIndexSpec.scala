@@ -254,7 +254,7 @@ class StandingIndexSpec extends SparkSpec {
     // The near-dup probe pays per-level work (bucket collision +
     // Jaccard verify each level) and its appends id-gate against every
     // live level, so its default compaction trigger is 4 — NOT the
-    // chunk/match families' 8 (IdxPublishBench sweep, PLANS round 15).
+    // chunk/match families' 8 (PLANS round 15, "maxLevels economics").
     // Pin the constant and the default-path behavior together: a
     // default that silently drifts back to 8 fails here.
     assert(StandingIndex.NearDupMaxLevels === 4)
